@@ -59,7 +59,7 @@ object T {
     * retried map tasks reproduce their row→partition assignment); a key
     * that is a pure function of the row needs no such sort — retries are
     * reproducible by construction (guide §2.5 "derive the synthetic key
-    * deterministically"). Measured (tools/SpreadAb, sf0.1, min of 4):
+    * deterministically"). Measured (sf0.1, min of 4; OPTIMIZATION_r17.md):
     * lineitem spread+noop 1.21→0.88 s, documents a wash (0.18 vs 0.17).
     * Every spread call site carries a high-cardinality id among its
     * non-string columns (doc_id / vec_id / event_id / lineitem keys), so

@@ -210,8 +210,8 @@ object Curation {
   /** Adjacent token pairs in ONE tight Scala pass. The Catalyst form
     * (filter HOF → transform(sequence) building 26.6 M structs) runs
     * interpreted — HigherOrderFunctions are CodegenFallback — and the
-    * sf10 profile charged 14–17 s PER PASS to it (graft.tools
-    * .BigramParts); the q163/modPGrams lesson again: one Scala loop per
+    * sf10 profile charged 14–17 s PER PASS to it (SCALE.md); the
+    * q163/modPGrams lesson again: one Scala loop per
     * row beats a generated-expression explode. Pair content identical:
     * tokens are maximal non-space runs, pairs (ws[i−1], ws[i]). */
   private[llm] val bigramPairsUdf = udf((text: String) => {

@@ -73,9 +73,6 @@ object Dedup {
                element_at(ws, i + 3))))
          else array($c) end), 1)""")
 
-  /** dev-probe alias (tools.PpjoinProbe); same column as `shingles`. */
-  private[graft] def shinglesPub(c: String): Column = shingles(c)
-
   private val shingleExpr = shingles("text")
 
   def minhashSignatures(docs: DataFrame): DataFrame =
@@ -182,18 +179,14 @@ object Dedup {
       maxBucket: Int = MaxBucketSize): DataFrame =
     minhashPairsImpl(s, docs, maxBucket, requireBandAgreement = false)
 
-  /** dev-probe hook (tools.Parts101): the band-agreement pipeline form,
-    * so the candidate-count linearity claim is measurable headlessly. */
-  private[graft] def minhashPairsForPipeline(s: SparkSession, docs: DataFrame): DataFrame =
-    minhashPairsImpl(s, docs, MaxBucketSize, requireBandAgreement = true)
-
   /** [[minhashPairs]] with `requireBandAgreement = true` — the form the
     * dedup PIPELINE (q101/q132 via [[dedupFlags]]) consumes. The band
     * key is a 4-min Horner fold mod p (p = 1000003, the oracle-replayable
     * modulus), so two UNRELATED docs collide in a band with probability
     * 1/p: candidate pairs from accidental fold collisions grow as
     * 16·n²/2p — measured super-linear at the sf30 gate (q101 4.43× time
-    * for 3× rows; Parts101 localized it to the pairs stage), and every
+    * for 3× rows, localized to the pairs stage: plans/r17/parts101_*.log,
+    * OPTIMIZATION_r17.md), and every
     * such pair pays the exact shingle verify. Requiring the band's
     * UNFOLDED 4-min tuple to agree (one 4-long slice compare on the
     * already-joined row — Broder/LSH's actual banding definition;
@@ -2153,29 +2146,28 @@ object Dedup {
     * capstone's checkpoint (r16; guide §2.4 "orderBy used only to make
     * output deterministic"). */
   private[graft] def dedupFlags(s: SparkSession, docs: DataFrame,
-      threshold: Double): DataFrame = {
-    // requireBandAgreement: the pipeline only consumes pairs at
-    // jaccard ≥ threshold, so the folded-hash collision candidates (the
-    // sf30 super-linear term) are pure verify cost here — see
-    // [[minhashPairsImpl]] for the recall argument
-    val pairs = minhashPairsImpl(s, docs, MaxBucketSize,
-        requireBandAgreement = true)
-      .filter(col("jaccard") >= threshold)
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-    graft.ops.Graph.connectedComponents(docs.select(col("doc_id").as("node")), pairs)
+      threshold: Double): DataFrame =
+    graft.ops.Graph.connectedComponents(docs.select(col("doc_id").as("node")),
+        dedupEdges(s, docs, threshold))
       .select(col("node").as("doc_id"), col("component").as("cluster"),
         (col("node") === col("component")).as("keep"))
-  }
+
+  /** The pipeline's thresholded near-dup edges (src < dst) — the input
+    * [[dedupFlags]] closes into clusters, and the edge set the sf10/sf30
+    * q101 gate replays its closure from. requireBandAgreement: the
+    * pipeline only consumes pairs at jaccard ≥ threshold, so the
+    * folded-hash collision candidates (the sf30 super-linear term) are
+    * pure verify cost here — see [[minhashPairsImpl]] for the recall
+    * argument. */
+  private[graft] def dedupEdges(s: SparkSession, docs: DataFrame,
+      threshold: Double): DataFrame =
+    minhashPairsImpl(s, docs, MaxBucketSize, requireBandAgreement = true)
+      .filter(col("jaccard") >= threshold)
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
 
   def dedupPipeline(s: SparkSession, docs: DataFrame, threshold: Double): DataFrame =
     dedupFlags(s, docs, threshold).orderBy(asc_nulls_first("doc_id"))
 
-  /** q101: dedupPipeline over the corpus with duplicates planted
-    * IN-QUERY (the driver corpus is dup-free): every 25th doc gets a
-    * near-clone (3 appended tokens, shingle-Jaccard ≈ 0.9) and every
-    * 40th an exact clone. Deterministic end to end (hash signatures,
-    * banding, CC), so DedupSpec pins the exact expectation: planted ids
-    * cluster with their source and only the source keeps. */
   /** q101's oracle (direct since r14): the production pair replay
     * ([[prodPairsCtes]]) over the planted corpus, the jaccard ≥ 0.8
     * edge filter on the SAME rounded doubles both engines compute, and
@@ -2198,20 +2190,29 @@ object Dedup {
       SELECT doc_id, component AS cluster, doc_id = component AS keep
       FROM comp ORDER BY doc_id ASC NULLS FIRST"""
 
+  /** q101 runs dedupPipeline over this corpus: duplicates planted
+    * IN-QUERY (the fixture corpus is dup-free), every 25th doc gets a
+    * near-clone (3 appended tokens, shingle-Jaccard ≈ 0.9) and every
+    * 40th an exact clone, at span-derived ids. Deterministic end to end
+    * (hash signatures, banding, CC), so DedupSpec pins the exact
+    * expectation: planted ids cluster with their source and only the
+    * source keeps. */
+  private[graft] def q101Corpus(s: SparkSession, dir: String): DataFrame = {
+    // T.spread: the minhash signature UDF downstream is compute-dense
+    // and the single-file scan is one task without it
+    val base = T.spread(s, T(s, dir, "documents")).select(col("doc_id"), col("text"))
+    val span = spanFrame(base)
+    val near = base.filter(col("doc_id") % 25 === 0).crossJoin(span)
+      .select((col("doc_id") + lit(2L) * col("_span")).as("doc_id"),
+        concat(col("text"), lit(" appended near dup suffix")).as("text"))
+    val exact = base.filter(col("doc_id") % 40 === 0).crossJoin(span)
+      .select((col("doc_id") + lit(3L) * col("_span")).as("doc_id"), col("text"))
+    base.unionByName(near).unionByName(exact)
+  }
+
   private lazy val q101 = Q(
     "q101_dedup_pipeline",
-    (s, dir) => {
-      // T.spread: the minhash signature UDF downstream is compute-dense
-      // and the single-file scan is one task without it
-      val base = T.spread(s, T(s, dir, "documents")).select(col("doc_id"), col("text"))
-      val span = spanFrame(base)
-      val near = base.filter(col("doc_id") % 25 === 0).crossJoin(span)
-        .select((col("doc_id") + lit(2L) * col("_span")).as("doc_id"),
-          concat(col("text"), lit(" appended near dup suffix")).as("text"))
-      val exact = base.filter(col("doc_id") % 40 === 0).crossJoin(span)
-        .select((col("doc_id") + lit(3L) * col("_span")).as("doc_id"), col("text"))
-      dedupPipeline(s, base.unionByName(near).unionByName(exact), 0.8)
-    },
+    (s, dir) => dedupPipeline(s, q101Corpus(s, dir), 0.8),
     Some(q101OracleSql),
     "capstone dedup: MinHash-LSH pairs -> connected components -> canonical doc per cluster (keep flags); full chain hash-gated")
 

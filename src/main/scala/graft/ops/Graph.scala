@@ -37,8 +37,8 @@ object Graph {
     // eager localCheckpoint(true) ran a materialization job AND the
     // signature aggregation ran a second one — per round. The lazy form
     // materializes the checkpoint inside the signature job (the same
-    // folding PrAb measured fastest for PageRank), halving the per-round
-    // action count; frames and results are bit-identical.
+    // folding measured fastest for PageRank, see pageRank), halving the
+    // per-round action count; frames and results are bit-identical.
     var e = init.distinct().localCheckpoint(false)
     var sig = signature(e)
     var converged = false
@@ -278,24 +278,19 @@ object Graph {
     * re-aggregate by dst — both carrying only (long, long) pairs; the
     * rank frame is checkpointed per round so Catalyst re-plans a
     * constant-size tree (q82's lineage argument). Hub in-degree skew is
-    * a SUM aggregation (map-side partials), not a collect_list. */
-  def pageRank(edges: DataFrame, iters: Int): DataFrame =
-    pageRankWith(edges, iters)(_.localCheckpoint(false))
-
-  /** [[pageRank]] with the per-iteration rank materialization strategy
-    * injected — the A/B surface for graft.tools.PrAb (eager/lazy
-    * localCheckpoint vs persist+count vs pure lineage). Production uses
-    * LAZY localCheckpoint since r16: the Dataset is wrapped in a
-    * LogicalRDD immediately either way (constant-size re-plan per
-    * iteration — the lineage argument is unchanged), but laziness folds
-    * the materialization into the next iteration's job instead of a
-    * synchronous per-iteration barrier. Measured at sf10 under the
-    * interleaved PrAb protocol (min/med of 5): eager 50.5/66.5 s, lazy
-    * 47.6/52.2 s, persist+count 52.5/53.7 s, pure lineage 55.3/62.6 s.
+    * a SUM aggregation (map-side partials), not a collect_list.
+    *
+    * The per-iteration rank frame is a LAZY localCheckpoint (r16): the
+    * Dataset is wrapped in a LogicalRDD immediately either way
+    * (constant-size re-plan per iteration — the lineage argument is
+    * unchanged), but laziness folds the materialization into the next
+    * iteration's job instead of a synchronous per-iteration barrier.
+    * Measured at sf10 on q156, interleaved in one session (min/med of
+    * 5): eager 50.5/66.5 s, lazy 47.6/52.2 s, persist+count
+    * 52.5/53.7 s, pure lineage 55.3/62.6 s (SCALE.md, OPTIMIZATION_r16.md).
     * The edge frame's one-time checkpoint is not varied (it is reused
     * `iters` times by construction). */
-  private[graft] def pageRankWith(edges: DataFrame, iters: Int)(
-      mat: DataFrame => DataFrame): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int): DataFrame = {
     // lazy checkpoint: deg has TWO consumers (the edge frame below and
     // the rank-1000000 seed) — without it the degree aggregation (a full
     // pass over the edge list) ran twice, once inside the eager edge
@@ -311,13 +306,15 @@ object Graph {
     // irreducible PageRank shuffle.
     val e = edges.join(deg, Seq("src"))
       .repartition(col("src")).localCheckpoint(true)
-    var pr = mat(deg.select(col("src").as("node"), lit(1000000L).as("pr")))
+    var pr = deg.select(col("src").as("node"), lit(1000000L).as("pr"))
+      .localCheckpoint(false)
     for (_ <- 1 to iters) {
-      pr = mat(e.join(pr, e("src") === pr("node"))
+      pr = e.join(pr, e("src") === pr("node"))
         .select(col("dst"), expr("pr div deg").as("contrib"))
         .groupBy(col("dst")).agg(sum(col("contrib")).as("s"))
         .select(col("dst").as("node"),
-          (lit(150000L) + expr("(85 * s) div 100")).as("pr")))
+          (lit(150000L) + expr("(85 * s) div 100")).as("pr"))
+        .localCheckpoint(false)
     }
     pr
   }
@@ -328,31 +325,26 @@ object Graph {
     * (domain authority à la Common Crawl's harmonic-centrality ranking).
     * Three exact-integer iterations; the oracle replays them as three
     * chained CTEs. Top-100 with (rank, node) tie-break, all BIGINT. */
-  /** The full q156 shape with the rank materialization injected —
-    * the timing surface PrAb interleaves. */
-  private[graft] def q156Shaped(s: SparkSession, dir: String)(
-      mat: DataFrame => DataFrame): DataFrame = {
-    val e0 = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
-      .distinct()
-      // lazy checkpoint: the undirected union reads e0 TWICE (forward +
-      // swapped) and ReusedExchange does not fire across the projection —
-      // without it the lineitem⋈orders join + distinct ran once per
-      // branch (r17 jobprof: paired duplicate 3-task and 16-task jobs)
-      .localCheckpoint(false)
-    val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
-    pageRankWith(und, 3)(mat)
-      .select(when(col("node") % 2 === 0, "customer").otherwise("part").as("node_type"),
-        expr("node div 2").as("id"), col("pr"))
-      .orderBy(desc("pr"), asc_nulls_first("node_type"), asc_nulls_first("id"))
-      .limit(100)
-  }
-
   private val q156 = Q(
     "q156_pagerank",
-    (s, dir) => q156Shaped(s, dir)(_.localCheckpoint(false)),
+    (s, dir) => {
+      val e0 = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
+        .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
+          col("l_orderkey") === col("o_orderkey"))
+        .select((col("o_custkey") * 2).as("src"), (col("l_partkey") * 2 + 1).as("dst"))
+        .distinct()
+        // lazy checkpoint: the undirected union reads e0 TWICE (forward +
+        // swapped) and ReusedExchange does not fire across the projection —
+        // without it the lineitem⋈orders join + distinct ran once per
+        // branch (r17 jobprof: paired duplicate 3-task and 16-task jobs)
+        .localCheckpoint(false)
+      val und = e0.union(e0.select(col("dst").as("src"), col("src").as("dst")))
+      pageRank(und, 3)
+        .select(when(col("node") % 2 === 0, "customer").otherwise("part").as("node_type"),
+          expr("node div 2").as("id"), col("pr"))
+        .orderBy(desc("pr"), asc_nulls_first("node_type"), asc_nulls_first("id"))
+        .limit(100)
+    },
     Some("""WITH e0 AS (SELECT DISTINCT 2 * o_custkey AS src, 2 * l_partkey + 1 AS dst
                FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
       e AS (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0),

@@ -48,7 +48,8 @@ object Streams {
     * (8, or 4 for the outer interval joins) were tuned at sf0.1, where
     * the fixed per-batch commit floor dominates and fewer stores win.
     * At sf10 the per-partition state WORK dominates instead: the r16
-    * interleaved StreamAb A/B (sf10, min of 2 reps) measured the four
+    * interleaved state-store A/B (sf10, min of 2 reps; recorded in
+    * SCALE.md, round 16) measured the four
     * stream-stream interval joins at 28-35 s on their bases, 16-19 s at
     * 16 partitions, and 18-21 s at 32 — so beyond 32 MB of staged
     * source the count steps to 16, beyond 256 MB to 32 (the local core
@@ -70,13 +71,7 @@ object Streams {
     else base
   }
 
-  private def withStatePartitions[A](s: SparkSession, n0: Int)(body: => A): A = {
-    // dev-only A/B override (tools/StreamAb): the per-batch state-commit
-    // floor scales with the partition count, so the count is a measured
-    // choice, not a constant of nature — production paths never set this
-    // (system property first so one JVM can interleave arms)
-    val n = sys.props.get("graft.state.parts").orElse(
-      sys.env.get("GRAFT_STATE_PARTS")).map(_.toInt).getOrElse(n0)
+  private def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
     val pKey = "spark.sql.shuffle.partitions"
     val nKey = "spark.sql.streaming.noDataMicroBatches.enabled"
     val cKey = "spark.sql.streaming.checkpointLocation"
@@ -1230,6 +1225,35 @@ object Streams {
     Some(q211OracleSql),
     "streaming ingest dedup twin: q142's wave-staged prefix classification with the q210 mod-p kernel — arrival-prefix semantics, index maintenance, and per-wave hot caps all hash-gated")
 
+  /** End-of-stream flush shared by the outer interval joins (q168, q198):
+    * drain the staged source, then append two far-future sentinel files
+    * to `stage`, one micro-batch each, so the watermark passes every real
+    * row's eviction bound. Each file is two rows: event_id −5 lands in
+    * the trade branch (pmod 0), −1 in the quote branch (pmod 4, value
+    * passes the ≥8 filter); user −1 matches nothing on either side. */
+  private def drainWithSentinels(s: SparkSession,
+      q: org.apache.spark.sql.streaming.StreamingQuery, schema: StructType,
+      src0: String, stage: String): Unit = {
+    q.processAllAvailable()
+    val maxTs = graft.Ts.maxNanos(s, src0)
+    for (i <- 1 to 2) {
+      val farNs = maxTs + (4000L + i) * 3600L * 1000000000L
+      // range(start, end, step, numPartitions=1): the default slices by
+      // defaultParallelism, paying ~31 empty write tasks per sentinel
+      val sentinel = s.range(0, 2, 1, 1).select(schema.fields.map { f =>
+        f.name match {
+          case "event_id" => when(col("id") === 0, lit(-5L)).otherwise(lit(-1L)).as("event_id")
+          case "ts" => graft.Ts.litNanos(schema, farNs).as("ts")
+          case "user_id" => lit(-1L).as("user_id")
+          case "value" => lit(9.99).as("value")
+          case other => lit(null).cast(f.dataType).as(other)
+        }
+      }: _*)
+      sentinel.write.mode("append").parquet(stage)
+      q.processAllAvailable()
+    }
+  }
+
   /** Stream-stream LEFT OUTER interval join — q65's missing-side
     * completion: trades with NO qualifying quote in the 24 h lookback
     * must still emit (with nulls), which an inner join silently drops.
@@ -1299,29 +1323,8 @@ object Streams {
         ()
       }
       .start()
-    try {
-      q.processAllAvailable()
-      val maxTs = graft.Ts.maxNanos(s, src0)
-      for (i <- 1 to 2) {
-        val farNs = maxTs + (4000L + i) * 3600L * 1000000000L
-        // two rows: event_id −5 lands in the trade branch (pmod 0), −1 in
-        // the quote branch (pmod 4, value passes the ≥8 filter); user −1
-        // matches nothing on either side
-        // range(start, end, step, numPartitions=1): the default slices by
-        // defaultParallelism, paying ~31 empty write tasks per sentinel
-        val sentinel = s.range(0, 2, 1, 1).select(schema.fields.map { f =>
-          f.name match {
-            case "event_id" => when(col("id") === 0, lit(-5L)).otherwise(lit(-1L)).as("event_id")
-            case "ts" => graft.Ts.litNanos(schema, farNs).as("ts")
-            case "user_id" => lit(-1L).as("user_id")
-            case "value" => lit(9.99).as("value")
-            case other => lit(null).cast(f.dataType).as(other)
-          }
-        }: _*)
-        sentinel.write.mode("append").parquet(stage.toString)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    try drainWithSentinels(s, q, schema, src0, stage.toString)
+    finally q.stop()
     s.read.parquet(partialsDir)
       .filter(col("trade_id") >= 0)
       .groupBy(col("trade_id"))
@@ -1411,26 +1414,8 @@ object Streams {
         ()
       }
       .start()
-    try {
-      q.processAllAvailable()
-      val maxTs = graft.Ts.maxNanos(s, src0)
-      for (i <- 1 to 2) {
-        val farNs = maxTs + (4000L + i) * 3600L * 1000000000L
-        // range(start, end, step, numPartitions=1): the default slices by
-        // defaultParallelism, paying ~31 empty write tasks per sentinel
-        val sentinel = s.range(0, 2, 1, 1).select(schema.fields.map { f =>
-          f.name match {
-            case "event_id" => when(col("id") === 0, lit(-5L)).otherwise(lit(-1L)).as("event_id")
-            case "ts" => graft.Ts.litNanos(schema, farNs).as("ts")
-            case "user_id" => lit(-1L).as("user_id")
-            case "value" => lit(9.99).as("value")
-            case other => lit(null).cast(f.dataType).as(other)
-          }
-        }: _*)
-        sentinel.write.mode("append").parquet(stage.toString)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    try drainWithSentinels(s, q, schema, src0, stage.toString)
+    finally q.stop()
     val parts = s.read.parquet(pDir)
     val perTrade = parts.filter(col("trade_id").isNotNull)
       .groupBy(col("trade_id"))

@@ -160,10 +160,11 @@ def q208(sf, out):
 @check("q101_dedup_pipeline")
 def q101(sf, out):
     """Decomposed oracle: pair kernel gated by q25's slice row (same
-    production code path; the planted docs are content-derived from the
-    same corpus), closure + keep replayed in full from the engine's
-    edge dump (tools/run.sh graft.tools.DumpEdges101 writes it next to
-    the verify output)."""
+    signature/banding/verify code; the planted docs are content-derived
+    from the same corpus), closure + keep replayed in full from q101's
+    own thresholded edge frame (Dedup.dedupEdges over Dedup.q101Corpus;
+    tools/run.sh graft.tools.DumpEdges101 writes it next to the verify
+    output)."""
     con = connect(sf)
     edge_files = glob.glob(f"{out}/_edges_q101/*.parquet")
     assert edge_files, "run graft.tools.DumpEdges101 first (writes _edges_q101)"

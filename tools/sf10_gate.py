@@ -87,8 +87,9 @@ def main():
         # fell past the 16-char prefix the production token hash reads
         # (Dedup.tokenHashes) -- cross-copy docs got IDENTICAL minhash
         # signatures and every pair query went super-linear BY FIXTURE
-        # CONSTRUCTION (the sf30 4.4x flag; PairsProbe: 499k/522k natural
-        # sf30 candidates were cross-copy est=1.0 / jaccard=0.0 pairs).
+        # CONSTRUCTION (the sf30 4.4x flag: 499k/522k natural sf30
+        # candidates were cross-copy est=1.0 / jaccard=0.0 pairs;
+        # plans/r17/pairsprobe_stacked_sf10_sf30.log).
         # A single application keeps the salt inside the hashed prefix.
         assert sh(f"{run} graft.tools.MakeSf /root/testdata/sf0.1 {sf1} 10",
                   env32, log) == 0
