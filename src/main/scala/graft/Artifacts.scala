@@ -165,6 +165,6 @@ object Artifacts {
       build.coalesce(1).write.mode("overwrite").parquet(stage.toString)
       publish(stage, dir)
     }
-    s.read.parquet(dir.toString)
+    ParquetMeta.read(s, dir.toString)
   }
 }

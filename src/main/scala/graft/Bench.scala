@@ -13,6 +13,55 @@ package graft
   * (`queries_median` — how a typical run feels under this VM's noise), and
   * explicit machine-readable totals for both. */
 object Bench {
+  /** A failure as one line: exception class and message. */
+  def cause(t: Throwable): String =
+    t.getClass.getName + ": " + String.valueOf(t.getMessage).linesIterator.nextOption().getOrElse("")
+
+  /** JSON string literal of `v`. */
+  def jstr(v: String): String = "\"" + v.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The timed reps of one bench run. `times` holds each good query's
+    * seconds, newest first; a query that threw on any rep is in `failed`
+    * with its cause instead, and counts toward no total. */
+  final case class Runs(names: Seq[String], reps: Int,
+      times: Map[String, List[Double]], failed: Map[String, String]) {
+    val ok: Seq[String] = names.filterNot(failed.contains)
+    def totalMin: Double = ok.map(times(_).min).sum
+    def totalMedian: Double = ok.map(n => median(times(n))).sum
+    /** Per-pass totals over the good queries, in pass order. */
+    def repTotals: Seq[Double] =
+      (0 until reps).map(k => ok.map(n => times(n).reverse(k)).sum)
+  }
+
+  def median(xs: List[Double]): Double = {
+    val s = xs.sorted
+    if (s.isEmpty) 0.0
+    else if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
+  /** Run `names` through `run` in `reps` round-robin passes, timing each
+    * call. A query that throws is recorded with its cause, skipped on
+    * later passes, and its times are dropped: a time-to-failure must not
+    * lower a total. */
+  def timeReps(names: Seq[String], reps: Int)(run: String => Unit): Runs = {
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val times = scala.collection.mutable.Map.empty[String, List[Double]]
+    for (_ <- 1 to reps; name <- names if !failed.contains(name)) {
+      val t0 = System.nanoTime()
+      try {
+        run(name)
+        times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
+      } catch { case e: Throwable => failed(name) = cause(e) }
+    }
+    Runs(names, reps, times.toMap -- failed.keys, failed.toMap)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -38,7 +87,7 @@ object Bench {
         "q101_dedup_pipeline", "q132_training_shards",
         "q156_pagerank", "q126_table_stats", "q151_curriculum_order"))
       try SparkEntry.queries(w)(spark, warmDir).count()
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warm-up $w failed: ${cause(e)}") }
     // Shared-ARTIFACT setup, timed separately (setup_sec + setup_steps in
     // BENCH_DETAIL): work a deployment performs once at ingest/index time
     // and serves from the catalog — the year-partitioned scenes archive
@@ -55,16 +104,15 @@ object Bench {
       "bucketed" -> (() => { graft.ops.Bucketed.ensureTables(spark, sfDir); () }),
       "components" -> (() => graft.ops.Graph.warmComponents(spark, sfDir)),
       "ivf" -> (() => graft.llm.Ivf.warmIndex(spark, sfDir)))
-    val setupTimes = setupSteps.map { case (n, f) =>
+    // each step's seconds, or its cause when it threw
+    val setupTimes: Seq[(String, Either[String, Double])] = setupSteps.map { case (n, f) =>
       val t0 = System.nanoTime()
-      val ok = try { f(); true } catch { case _: Throwable => false }
-      n -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+      n -> (try { f(); Right((System.nanoTime() - t0) / 1e9) }
+        catch { case e: Throwable => Left(cause(e)) })
     }
-    val setupSec = setupTimes.map(_._2).filter(_ >= 0).sum
+    val setupSec = setupTimes.flatMap(_._2.toOption).sum
 
     val names = SparkEntry.queries.keys.toSeq.sorted
-    val failed = scala.collection.mutable.Set.empty[String]
-    val times = scala.collection.mutable.Map.empty[String, List[Double]]
     // Memory/spill telemetry (SCALE.md): per-task peakExecutionMemory max
     // and spill-byte totals attributed to whichever query is running when
     // the task ends. The listener bus is async, so a task finishing at a
@@ -87,20 +135,16 @@ object Bench {
         }
       }
     })
-    for (_ <- 1 to reps; name <- names if !failed(name)) {
+    val runs = timeReps(names, reps) { name =>
       currentQuery = name
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => failed += name }
-      times(name) = ((System.nanoTime() - t0) / 1e9) :: times.getOrElse(name, Nil)
+      SparkEntry.queries(name)(spark, sfDir).count()
+      ()
     }
     currentQuery = null
-    def median(xs: List[Double]): Double = {
-      val s = xs.sorted
-      if (s.isEmpty) 0.0
-      else if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
+    val ok = runs.ok
+    val times = runs.times
+    val totalMin = runs.totalMin
+    val totalMedian = runs.totalMedian
     // Locale.ROOT: the f-interpolator uses the JVM default locale, which
     // under e.g. de_DE renders "12,34" — invalid JSON for the driver parser.
     def r2(x: Double): String = String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
@@ -122,28 +166,22 @@ object Bench {
     // Full-fidelity per-query detail (long names, min AND median AND cold
     // per rep set, memory/spill) goes to BENCH_DETAIL.json in the repo.
     def shortKey(n: String): String = n.takeWhile(_ != '_')
+    // per-query maps cover the good queries only; failed ones are listed
+    // under `failed` (names) and `failed_causes` (name -> cause)
     def jmap(f: List[Double] => Double): String =
-      names.map(n => "\"" + shortKey(n) + "\":" + r2(f(times.getOrElse(n, List(0.0)))))
-        .mkString("{", ",", "}")
+      ok.map(n => "\"" + shortKey(n) + "\":" + r2(f(times(n)))).mkString("{", ",", "}")
     def jmapLong(f: List[Double] => Double): String =
-      names.map(n => "\"" + n + "\":" + f(times.getOrElse(n, List(0.0))))
-        .mkString("{", ",", "}")
-    val totalMin = names.map(n => times.getOrElse(n, List(0.0)).min).sum
-    val totalMedian = names.map(n => median(times.getOrElse(n, List(0.0)))).sum
+      ok.map(n => "\"" + n + "\":" + f(times(n))).mkString("{", ",", "}")
     // Back-to-back per-pass totals (chronological): the spread across
     // passes of IDENTICAL code in ONE JVM is this VM's noise band — lets
     // a reader separate co-tenant contention from real regressions
-    // without re-running (times lists are built by prepending, so
-    // chronological order is the reverse).
-    val repTotals = (0 until reps).map { k =>
-      names.map { n =>
-        val chron = times.getOrElse(n, Nil).reverse
-        if (k < chron.size) chron(k) else 0.0
-      }.sum
-    }
+    // without re-running.
+    val repTotals = runs.repTotals
     val repTotalsJson = repTotals.map(r2).mkString("[", ",", "]")
     val spread = if (repTotals.isEmpty) 0.0 else repTotals.max - repTotals.min
-    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = runs.failed.keys.toSeq.sorted.map(jstr).mkString("[", ",", "]")
+    val causesJson = runs.failed.toSeq.sorted
+      .map { case (n, c) => jstr(n) + ":" + jstr(c.take(300)) }.mkString("{", ",", "}")
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir).map(_.group(1)).getOrElse("0")
     // queries_cold = each query's FIRST chronological rep (times lists are
     // prepend-built, so chronological-first = .last). Several queries are
@@ -170,10 +208,10 @@ object Bench {
       s""""total_min":$totalMin,"total_median":$totalMedian,"reps":$reps,""" +
       s""""rep_totals":$repTotalsJson,"rep_spread":${r2(spread)},""" +
       s""""setup_sec":${r2(setupSec)},""" +
-      setupTimes.map { case (n, t) => "\"" + n + "\":" + r2(t) }
+      setupTimes.map { case (n, t) => jstr(n) + ":" + t.fold(c => jstr(c.take(300)), r2) }
         .mkString("\"setup_steps\":{", ",", "},") +
       s"""$memJson,""" +
-      s""""failed":$failedJson,"sf":$sfNum}"""
+      s""""failed":$failedJson,"failed_causes":$causesJson,"sf":$sfNum}"""
     try {
       val p = java.nio.file.Paths.get("BENCH_DETAIL.json")
       java.nio.file.Files.write(p, detail.getBytes("UTF-8"))
@@ -186,16 +224,17 @@ object Bench {
       java.nio.file.Files.write(h, stamped.getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-    } catch { case _: Throwable => () }
+    } catch {
+      case e: Throwable => System.err.println(s"[bench] writing BENCH_DETAIL.json failed: ${cause(e)}")
+    }
     val common = s""""total_min":${r2(totalMin)},"total_median":${r2(totalMedian)},""" +
       s""""reps":$reps,"failed":$failedJson,"sf":$sfNum"""
     println(s"""{"metric":"total","value":${r2(totalMin)},"unit":"sec",""" +
-      s""""queries":${jmap(_.min)},$common}""")
+      s""""queries":${jmap(_.min)},"failed_causes":$causesJson,$common}""")
     // Trailer sized for the tail window: 25 slowest queries keyed by qNN
     // is < 500 chars; total line stays well under ~1500.
-    val slowest = names.sortBy(n => -times.getOrElse(n, List(0.0)).min).take(25)
-    val topJson = slowest.map(n =>
-      "\"" + shortKey(n) + "\":" + r2(times.getOrElse(n, List(0.0)).min))
+    val slowest = ok.sortBy(n => -times(n).min).take(25)
+    val topJson = slowest.map(n => "\"" + shortKey(n) + "\":" + r2(times(n).min))
       .mkString("{", ",", "}")
     println(s"""{"metric":"total","value":${r2(totalMin)},"unit":"sec",""" +
       s""""n_queries":${names.size},"queries_slowest":$topJson,""" +

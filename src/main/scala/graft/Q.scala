@@ -24,15 +24,96 @@ final case class Q(
     oracle: Option[String] = None,
     doc: String = "")
 
+/** Table metadata read from parquet footers on the driver, so naming a
+  * table costs no Spark job. `spark.read.parquet(path)` runs one job to
+  * infer the schema from a footer, and `count()` runs two to add up row
+  * counts the footers already hold.
+  *
+  * Nothing is memoized: every call lists the path and reads the footers
+  * again, so a rewritten file is seen by the next caller. */
+object ParquetMeta {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileStatus, Path}
+  import org.apache.parquet.format.converter.ParquetMetadataConverter
+  import org.apache.parquet.hadoop.Footer
+  import org.apache.parquet.hadoop.metadata.ParquetMetadata
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.execution.datasources.parquet.{
+    ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+  import scala.jdk.CollectionConverters._
+
+  /** `spark.read.parquet(path)` with the schema taken from the footer of
+    * the first data file, converted as Spark's own inference converts it
+    * (`ParquetFileFormat.readSchemaFromFooter`: the Spark row-metadata key
+    * when present, else the session-configured converter, so
+    * `nanosAsLong` and the other parquet settings apply). Partition
+    * columns are still inferred from the paths by Spark. A missing or
+    * empty path falls through to `spark.read.parquet`, so Spark's own
+    * error surfaces. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    dataFiles(conf, path).headOption match {
+      case Some(first) =>
+        val footer = new Footer(first.getPath, readFooter(conf, first))
+        val schema = ParquetFileFormat.readSchemaFromFooter(
+          footer, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+  }
+
+  /** Row count: the sum of the footers' row-group row counts. Above
+    * Spark's `parallelPartitionDiscovery.threshold` data files (Spark's
+    * own cutover from driver-side to job-side listing) it falls back to
+    * `count()`, so a large table's footers are not read serially on the
+    * driver. */
+  def rows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val threshold = spark.sessionState.conf.parallelPartitionDiscoveryThreshold
+    val files = dataFiles(conf, path).take(threshold + 1).toList
+    if (files.isEmpty || files.length > threshold)
+      read(spark, path).count()
+    else files.iterator.map(readFooter(conf, _).getBlocks.asScala.map(_.getRowCount).sum).sum
+  }
+
+  /** Data files under `path` (the path itself when it is a file), sorted,
+    * skipping `_*` and `.*` entries as Spark's file index does. Empty when
+    * the path does not exist. Listed lazily, so a caller that needs the
+    * first few files does not walk a large table. */
+  private def dataFiles(conf: Configuration, path: String): LazyList[FileStatus] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(s: FileStatus) = {
+      val n = s.getPath.getName
+      n.startsWith(".") || (n.startsWith("_") && !n.contains("="))
+    }
+    def walk(s: FileStatus): LazyList[FileStatus] =
+      if (s.isDirectory)
+        LazyList.from(fs.listStatus(s.getPath).filterNot(hidden).sortBy(_.getPath.getName)).flatMap(walk)
+      else LazyList(s)
+    try walk(fs.getFileStatus(p))
+    catch { case _: java.io.FileNotFoundException => LazyList.empty }
+  }
+
+  private def readFooter(conf: Configuration, f: FileStatus): ParquetMetadata =
+    ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+      ParquetMetadataConverter.NO_FILTER)
+}
+
 object T {
   /** Scan one driver table (see TESTDATA.md / FIXTURES.md §B).
+    *
+    * The schema comes from the table's parquet footer, read on the driver
+    * ([[ParquetMeta.read]]), so building the frame starts no Spark job.
+    * Nothing is memoized: each call reads the footer again, so a
+    * rewritten table is seen by the next query.
     *
     * `events.ts` is parquet TIMESTAMP(NANOS), which Spark only reads as a
     * raw long under `spark.sql.legacy.parquet.nanosAsLong=true` (set in
     * [[Sessions]]); convert here (ns → µs floor) so queries see a real
     * timestamp column. */
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    Ts.norm(spark.read.parquet(s"$sfDir/$name.parquet"))
+    Ts.norm(ParquetMeta.read(spark, s"$sfDir/$name.parquet"))
 
   /** Decouple COMPUTE parallelism from SCAN parallelism. A parquet file
     * only splits at row-group boundaries, so a small-bytes input is ONE
@@ -116,7 +197,7 @@ object Ts {
     * sentinel arithmetic (watermark-flush rows far in the future) is
     * written in, independent of the storage type. */
   def maxNanos(s: SparkSession, path: String): Long = {
-    val df = s.read.parquet(path)
+    val df = ParquetMeta.read(s, path)
     df.schema.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => df.agg(org.apache.spark.sql.functions.max(col("ts"))).head().getLong(0)
       case _ => df.agg(org.apache.spark.sql.functions.max(

@@ -112,7 +112,7 @@ object Ivf {
 
   /** Pruned probe-side read of a materialized index. */
   def readIndex(s: SparkSession, path: String, lists: Seq[Int]): DataFrame =
-    s.read.parquet(path).filter(col("list_id").isin(lists.map(Int.box): _*))
+    graft.ParquetMeta.read(s, path).filter(col("list_id").isin(lists.map(Int.box): _*))
 
   /** Per-JVM index cache keyed by the embedding table's input files: a
     * real engine builds an IVF index ONCE and serves many queries from it,
@@ -867,7 +867,7 @@ object Ivf {
   /** Reload books written by [[saveBooks]] — bounded collect
     * (groups × codes rows), reassembled in (g, c) order. */
   def loadBooks(s: SparkSession, path: String): Array[Array[Array[Double]]] =
-    s.read.parquet(path).orderBy("g", "c").collect()
+    graft.ParquetMeta.read(s, path).orderBy("g", "c").collect()
       .groupBy(_.getInt(0)).toArray.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray))
 
@@ -1009,7 +1009,7 @@ object Ivf {
       (qid, g, c, d)
     }
     val lut = s.createDataFrame(lutRows).toDF("qid", "g", "c", "lutd2")
-    val cand = s.read.parquet(codesPath)
+    val cand = graft.ParquetMeta.read(s, codesPath)
       .filter(col("list_id").isin(probed.map(Int.box): _*))
       .join(broadcast(qside.select(col("qid"), col("list_id"))), Seq("list_id"))
       .filter(col("qid") =!= col("vec_id"))

@@ -58,7 +58,7 @@ object Inverted {
     val buckets = s.createDataFrame(terms.map(Tuple1(_))).toDF("t")
       .select(pmod(xxhash64(col("t")), lit(NumBuckets)).cast("int"))
       .collect().map(_.getInt(0)).distinct.toSeq
-    s.read.parquet(path)
+    graft.ParquetMeta.read(s, path)
       .filter(col("bucket").isin(buckets: _*) && col("token").isin(terms: _*))
       .groupBy(col("doc_id"))
       .agg(countDistinct(col("token")).as("n_terms"),

@@ -43,7 +43,7 @@ object Manifest {
   def zones(s: SparkSession, path: String, zoneCol: Column,
       cap: Int = MaxEntries): Array[(String, Long, Long)] =
     guarded(
-      s.read.parquet(path)
+      graft.ParquetMeta.read(s, path)
         .groupBy(col("_metadata.file_path").as("file"))
         .agg(min(zoneCol).as("lo"), max(zoneCol).as("hi")),
       s"file zones of $path", cap)
@@ -72,7 +72,7 @@ object Manifest {
   def partitionValues(s: SparkSession, path: String, partCol: Column,
       cap: Int = MaxEntries): Array[String] =
     guarded(
-      s.read.parquet(path).select(partCol.cast("string").as("v")).distinct(),
+      graft.ParquetMeta.read(s, path).select(partCol.cast("string").as("v")).distinct(),
       s"partition values of $path", cap)
       .map(_.getString(0))
 }

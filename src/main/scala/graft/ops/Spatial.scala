@@ -105,10 +105,8 @@ object Spatial {
     * convention as [[elevationNx]]/[[parcelCount]] (≡ the old 6e6·sf on
     * every driver dir: events carries 1e6·sf rows), so an oracle can
     * rebuild the grid from the same parquet the engine reads. */
-  private[ops] def scenesTargetRows(s: SparkSession, sfDir: String): Long = {
-    val nEvents = s.read.parquet(s"$sfDir/events.parquet").count()
-    math.max(7200L, 6L * nEvents)
-  }
+  private[ops] def scenesTargetRows(s: SparkSession, sfDir: String): Long =
+    math.max(7200L, 6L * eventsRows(s, sfDir))
 
   /** 0.05·sin(2πk/12) for k = 0..11 as 4-decimal literals: the seasonal
     * NDVI term as a RATIONAL lookup instead of libm sin — exact decimal
@@ -186,7 +184,7 @@ object Spatial {
         .write.partitionBy("yr").mode("overwrite").parquet(p)
       p
     })
-    s.read.parquet(path)
+    graft.ParquetMeta.read(s, path)
   }
 
   /** The reference's month-window quirk, replicated not fixed
@@ -237,18 +235,20 @@ object Spatial {
     * size parameter both the engine and the DuckDB oracle must agree on,
     * so it comes from the DATA (events row count: a metadata-only parquet
     * count), never from parsing the dir name. */
-  private[ops] def elevationNx(s: SparkSession, sfDir: String): Int = {
-    val nEvents = s.read.parquet(s"$sfDir/events.parquet").count()
-    math.ceil(math.sqrt(math.max(10000L, 6L * nEvents).toDouble)).toInt
-  }
+  private[ops] def elevationNx(s: SparkSession, sfDir: String): Int =
+    math.ceil(math.sqrt(math.max(10000L, 6L * eventsRows(s, sfDir)).toDouble)).toInt
 
   /** Parcel count: max(31, round(31·|events|/1000)) — same data-derived
     * convention as [[elevationNx]] (≡ the old 31·sf/0.001 on every
     * driver dir). */
-  private[ops] def parcelCount(s: SparkSession, sfDir: String): Int = {
-    val nEvents = s.read.parquet(s"$sfDir/events.parquet").count()
-    math.max(31L, math.round(31.0 * nEvents / 1000.0)).toInt
-  }
+  private[ops] def parcelCount(s: SparkSession, sfDir: String): Int =
+    math.max(31L, math.round(31.0 * eventsRows(s, sfDir) / 1000.0)).toInt
+
+  /** Row count of the events table, the one size input of every spatial
+    * fixture: read from the parquet footers on the driver
+    * ([[graft.ParquetMeta.rows]]), so sizing a grid starts no Spark job. */
+  private[ops] def eventsRows(s: SparkSession, sfDir: String): Long =
+    graft.ParquetMeta.rows(s, s"$sfDir/events.parquet")
 
   /** Admin regions (FIXTURES.md §A6): 5 vertical strips over the envelope
     * in EPSG:4326. */

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.{Q, T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DecimalType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** Structured Streaming surface (SURVEY.md §2.9 extension): the events
@@ -124,11 +125,18 @@ object Streams {
     }
   }
 
+  /** Start `writer` and drain every input available now, stopping the
+    * query whether or not the drain throws. */
+  private def runToCompletion(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
   /** Run a tumbling-window streaming aggregation to completion over the
     * events parquet and return the final (complete-mode) result. */
   def streamTumblingHour(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
     // raw schema (ts = long under nanosAsLong), NOT T()'s converted one
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/events.parquet").schema
     // the file streaming source monitors a DIRECTORY; point it at sfDir
     // restricted to the events file
     val stream = s.readStream.schema(schema)
@@ -142,9 +150,8 @@ object Streams {
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("n_events"), col("sum_value"))
     val name = s"stream_tumbling_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+    runToCompletion(agg.writeStream.outputMode("complete")
+      .format("memory").queryName(name))
     s.table(name).orderBy(asc_nulls_first("hour"))
   }
 
@@ -163,7 +170,7 @@ object Streams {
     * window (4× the tumbling count, still window-spine-sized, never
     * event-sized). Complete-mode memory sink holds aggregate rows only. */
   def streamHoppingWindow(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -175,9 +182,8 @@ object Streams {
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("wstart"),
         col("n_events"), col("sum_value"))
     val name = s"stream_hopping_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+    runToCompletion(agg.writeStream.outputMode("complete")
+      .format("memory").queryName(name))
     s.table(name).orderBy(asc_nulls_first("wstart"))
   }
 
@@ -240,7 +246,7 @@ object Streams {
   def statefulUserCounts(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
     import s.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .select(col("user_id"))
@@ -254,9 +260,8 @@ object Streams {
       }
       .toDF("user_id", "n_events")
     val name = s"stateful_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = counted.writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+    runToCompletion(counted.writeStream.outputMode(OutputMode.Update())
+      .format("memory").queryName(name))
     s.table(name).groupBy(col("user_id"))
       .agg(max(col("n_events")).as("n_events"))
       .orderBy(asc_nulls_first("user_id"))
@@ -360,7 +365,7 @@ object Streams {
     * partition. */
   def streamIntervalJoin(s: SparkSession, dir: String,
       bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/events.parquet").schema
     def src = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Ts.norm).withColumn("tss", date_trunc("second", col("ts")))
@@ -380,17 +385,15 @@ object Streams {
         col("q_ts") <= col("t_ts"))
       .select(col("trade_id"), col("qval"))
     val partialsDir = graft.Scratch.fresh("ij_partials")
-    val q = joined.writeStream.outputMode("append")
+    runToCompletion(joined.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.groupBy(col("trade_id"))
           .agg(count(lit(1)).as("n"),
             sum(col("qval").cast(DecimalType(18, 2))).as("s"))
           .write.mode("append").parquet(partialsDir)
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    s.read.parquet(partialsDir)
+      })
+    graft.ParquetMeta.read(s, partialsDir)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).as("n_quotes"),
         sum(col("s")).cast(DoubleType).as("sum_qval"))
@@ -430,7 +433,7 @@ object Streams {
     * timestamp. */
   def streamDedup(s: SparkSession, dir: String,
       horizon: String = "1 hour"): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/documents.parquet").schema
     val outDir = graft.Scratch.fresh("dedup_out")
     val deduped = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -439,13 +442,11 @@ object Streams {
       .withWatermark("ts", horizon)
       .dropDuplicatesWithinWatermark("hash")
       .select(col("doc_id"), col("hash"))
-    val q = deduped.writeStream.outputMode("append")
+    runToCompletion(deduped.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         batch.write.mode("append").parquet(outDir)
         ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     // Layout-invariant result: the streaming pass decides the dedup SET
     // (which hashes survive the watermark horizon — the stateful
     // semantics under test), but dropDuplicatesWithinWatermark's
@@ -457,10 +458,10 @@ object Streams {
     // records — making the output identical under ANY input layout.
     // (distinct() guards the horizon edge: a duplicate arriving after
     // its predecessor's state expired is re-emitted by the operator.)
-    val canon = s.read.parquet(s"$dir/documents.parquet")
+    val canon = graft.ParquetMeta.read(s, s"$dir/documents.parquet")
       .select(col("doc_id"), md5(col("text").cast("binary")).as("hash"))
       .groupBy(col("hash")).agg(min(col("doc_id")).as("doc_id"))
-    s.read.parquet(outDir).select(col("hash")).distinct()
+    graft.ParquetMeta.read(s, outDir).select(col("hash")).distinct()
       .join(canon, Seq("hash"))
       .select(col("doc_id"), col("hash"))
       .orderBy(asc_nulls_first("doc_id"))
@@ -505,7 +506,7 @@ object Streams {
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val gapUs = 1800L * 1000000L
     val src = s"$dir/events.parquet"
-    val schema = s.read.parquet(src).schema
+    val schema = graft.ParquetMeta.read(s, src).schema
     // staging dir: symlink the events file, sentinel file appended later
     val stage = java.nio.file.Paths.get(graft.Scratch.fresh("sess_stage"))
     java.nio.file.Files.createSymbolicLink(
@@ -538,7 +539,7 @@ object Streams {
       q.processAllAvailable()
       // sentinel file: one gap-breaking row per user closes the last session
       val maxTs = graft.Ts.maxNanos(s, src)
-      val sentinel = s.read.parquet(src).select(col("user_id")).distinct()
+      val sentinel = graft.ParquetMeta.read(s, src).select(col("user_id")).distinct()
         .select(schema.fields.map { f =>
           f.name match {
             case "user_id" => col("user_id")
@@ -592,7 +593,7 @@ object Streams {
       .join(broadcast(T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))),
         col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey"), col("n_name"))
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.Ts.norm)
@@ -601,9 +602,8 @@ object Streams {
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).cast(DoubleType).as("sum_value"))
     val name = s"stream_static_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+    runToCompletion(agg.writeStream.outputMode("complete")
+      .format("memory").queryName(name))
     s.table(name).orderBy(asc_nulls_first("n_name"))
   }
 
@@ -719,20 +719,18 @@ object Streams {
       // of days — the shape that makes the MV's partition-pruned merge
       // pay off (a randomly-shuffled stage makes every batch touch every
       // day, the pathological worst case for ANY incremental MV)
-      s.read.parquet(s"$dir/events.parquet")
+      graft.ParquetMeta.read(s, s"$dir/events.parquet")
         .repartitionByRange(8, col("ts"))
         .write.mode("overwrite").parquet(stage)
     val mvRoot = graft.Scratch.fresh("mv_state")
-    val schema = s.read.parquet(stage).schema
+    val schema = graft.ParquetMeta.read(s, stage).schema
     val stream = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2").parquet(stage)
       .transform(graft.Ts.norm)
-    val q = stream.writeStream.outputMode("append")
+    runToCompletion(stream.writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         mvMergeBatch(s, mvRoot, batch, batchId)
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     if (!java.nio.file.Files.exists(java.nio.file.Paths.get(mvRoot, "_applied")))
       // zero-batch stage: the MV was never materialized — empty, typed
       s.sql("SELECT '' AS event_type, '' AS day, 0L AS n_events, 0D AS sum_value")
@@ -871,7 +869,7 @@ object Streams {
     def readOrEmpty(path: String, schema: StructType) =
       if (Files.exists(Paths.get(path))) s.read.schema(schema).parquet(path)
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    val q = s.readStream.schema(corpus.schema).option("maxFilesPerTrigger", "1").parquet(stage)
+    runToCompletion(s.readStream.schema(corpus.schema).option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream.outputMode("append")
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val marker = Paths.get(root, "_applied", batchId.toString)
@@ -913,9 +911,7 @@ object Streams {
           Files.createFile(marker)
           ()
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     s.read.schema(oSchema).parquet(outDir).orderBy(asc_nulls_first("doc_id"))
   }
 
@@ -961,7 +957,7 @@ object Streams {
       if (v >= 0 && Files.exists(Paths.get(s"$root/v$v")))
         s.read.schema(stSchema).parquet(s"$root/v$v")
       else s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], stSchema)
-    val q = s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
+    runToCompletion(s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
       .writeStream.outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val marker = Paths.get(root, "_applied", batchId.toString)
@@ -980,9 +976,7 @@ object Streams {
           Files.createFile(marker)
           ()
         }
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     val applied = Option(Paths.get(root, "_applied").toFile.list())
       .map(_.map(_.toLong)).getOrElse(Array.empty[Long])
     val counts = readState(if (applied.isEmpty) -1L else applied.max)
@@ -1061,14 +1055,13 @@ object Streams {
       StructField("ts", org.apache.spark.sql.types.TimestampType),
       StructField("event_type", StringType)))
     val name = "wm_late_audit"
-    val q = s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
+    runToCompletion(s.readStream.schema(inSchema).option("maxFilesPerTrigger", "1").parquet(stage)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("cnt"))
       .select(date_format(col("w.start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
         col("event_type"), col("cnt"))
-      .writeStream.outputMode("append").format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+      .writeStream.outputMode("append").format("memory").queryName(name))
     s.table(name).filter(col("event_type") =!= "__flush")
       .orderBy(asc_nulls_first("window_start"), asc_nulls_first("event_type"))
   }
@@ -1291,7 +1284,7 @@ object Streams {
   def streamLeftOuterJoin(s: SparkSession, dir: String,
       bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 4)) {
     val src0 = s"$dir/events.parquet"
-    val schema = s.read.parquet(src0).schema
+    val schema = graft.ParquetMeta.read(s, src0).schema
     val stage = java.nio.file.Paths.get(graft.Scratch.fresh("loj_stage"))
     java.nio.file.Files.createSymbolicLink(
       stage.resolve("events.parquet"), java.nio.file.Paths.get(src0))
@@ -1325,7 +1318,7 @@ object Streams {
       .start()
     try drainWithSentinels(s, q, schema, src0, stage.toString)
     finally q.stop()
-    s.read.parquet(partialsDir)
+    graft.ParquetMeta.read(s, partialsDir)
       .filter(col("trade_id") >= 0)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).cast(LongType).as("n_quotes"),
@@ -1374,7 +1367,7 @@ object Streams {
   def streamFullOuterJoin(s: SparkSession, dir: String,
       bucketHours: Int = 24): DataFrame = withStatePartitions(s, stateParts(dir, 4)) {
     val src0 = s"$dir/events.parquet"
-    val schema = s.read.parquet(src0).schema
+    val schema = graft.ParquetMeta.read(s, src0).schema
     val stage = java.nio.file.Paths.get(graft.Scratch.fresh("foj_stage"))
     java.nio.file.Files.createSymbolicLink(
       stage.resolve("events.parquet"), java.nio.file.Paths.get(src0))
@@ -1416,7 +1409,7 @@ object Streams {
       .start()
     try drainWithSentinels(s, q, schema, src0, stage.toString)
     finally q.stop()
-    val parts = s.read.parquet(pDir)
+    val parts = graft.ParquetMeta.read(s, pDir)
     val perTrade = parts.filter(col("trade_id").isNotNull)
       .groupBy(col("trade_id"))
       .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
@@ -1485,7 +1478,7 @@ object Streams {
     * along (q162's pattern) to expose the estimation error. */
   def streamKmvDistinct(s: SparkSession, dir: String): DataFrame = withStatePartitions(s, stateParts(dir, 8)) {
     import graft.llm.Sketches
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.ParquetMeta.read(s, s"$dir/events.parquet").schema
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
@@ -1501,9 +1494,8 @@ object Streams {
       .groupBy(col("event_type"), col("day"))
       .agg(kmvU(col("h")).as("sk"))
     val name = s"stream_kmv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = daily.writeStream.outputMode("complete")
-      .format("memory").queryName(name).start()
-    try q.processAllAvailable() finally q.stop()
+    runToCompletion(daily.writeStream.outputMode("complete")
+      .format("memory").queryName(name))
     // n_types × n_days sketch rows, ≤ K longs each — sketch-sized by
     // construction (the q225 bounded-collect rationale)
     val rows = s.table(name).collect()

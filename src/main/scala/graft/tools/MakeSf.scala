@@ -42,7 +42,7 @@ object MakeSf {
     val copies = if (args.length > 2) args(2).toInt else 10
     val s = graft.Sessions.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
 
-    def rd(t: String): DataFrame = s.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = graft.ParquetMeta.read(s, s"$src/$t.parquet")
     def span(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0) + 1
 
@@ -64,7 +64,7 @@ object MakeSf {
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
       finally walk.close()
-      println(s"[makesf] $t: ${s.read.parquet(dest.toString).count()} rows")
+      println(s"[makesf] $t: ${graft.ParquetMeta.rows(s, dest.toString)} rows")
     }
 
     // replicate df with per-copy key shifts; extra transforms per copy

@@ -33,7 +33,7 @@ object MakeSkew {
     val out = if (args.length > 1) args(1) else "/tmp/graft_skew"
     val s = graft.Sessions.build(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]", 32)
 
-    def rd(t: String): DataFrame = s.read.parquet(s"$src/$t.parquet")
+    def rd(t: String): DataFrame = graft.ParquetMeta.read(s, s"$src/$t.parquet")
     def keyMax(df: DataFrame, key: String): Long =
       df.agg(max(col(key))).head().getLong(0)
 
@@ -50,7 +50,7 @@ object MakeSkew {
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
       finally walk.close()
-      println(s"[makeskew] $t: ${s.read.parquet(dest.toString).count()} rows")
+      println(s"[makeskew] $t: ${graft.ParquetMeta.rows(s, dest.toString)} rows")
     }
 
     /** Zipf-ish key in [1, kmax]: u⁵ power sampling off a hash of `idCol`. */
